@@ -43,15 +43,7 @@ object Bench {
     if (idleWaitS > 1.0)
       System.err.println(
         f"[bench] idle gate: waited $idleWaitS%.0f s, load1 now $loadAtStart%.1f")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(cpus.toInt)
     // untimed warm-up: file indexes, parquet footers, codegen/JIT of
     // the common scan+agg+window paths — otherwise the alphabetically
     // first query absorbs ~3-5 s of session start-up
@@ -304,7 +296,7 @@ object Bench {
     // SPARK_GRAFT_EXTRA_SAMPLES=k (builder-only; the driver never
     // sets it, so its methodology — one sample + heuristic retry —
     // is unchanged) takes k additional timed samples per key and
-    // records the per-key MINIMUM across every sample of the run in
+    // records the per-key MINIMUM across every ok sample of the run in
     // bench_full.json's "min_sec" map, next to the raw walls. The
     // stdout JSON line, promotion, and the drift gate all keep using
     // the raw methodology walls; min_sec exists so a close artifact
@@ -335,7 +327,7 @@ object Bench {
           val (secE, _, _, okE) = sample(name, fn)
           if (okE) minWall = math.min(minWall, secE)
         }
-        minSec(name) = minWall
+        if (ok) minSec(name) = minWall
         if (ok && overPrior(name, sec)) {
           priorRegressed += name
           System.err.println(f"[bench] $name STILL >2x prior " +

@@ -273,13 +273,9 @@ object Main {
           System.err.println(usage)
           sys.exit(2)
         }
-        val spark = SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-          .appName("graft-log-streamer")
-          .config("spark.sql.shuffle.partitions", "4")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val master = sys.env.get("SPARK_GRAFT_MASTER").map("spark.master" -> _)
+        val spark = Sessions.start(4,
+          Seq("spark.app.name" -> "graft-log-streamer") ++ master: _*)
         // the AWS SDK is not on this classpath: the shipped transport
         // records in-JVM (InMemoryRecordsClient); production swaps in
         // the SDK-backed client (graft.sinks.SdkRecordsClient scaladoc

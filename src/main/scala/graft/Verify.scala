@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,14 +15,8 @@ object Verify {
     // sbt's classpath, so the cluster path ships the packaged jar
     // (SPARK_GRAFT_JAR, from `sbt package`) via spark.jars and
     // mirrors the compiled-classes dir on the executor classpath.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JAR").foreach { jar =>
+    val master = sys.env.get("SPARK_GRAFT_MASTER").map("spark.master" -> _)
+    val cluster = sys.env.get("SPARK_GRAFT_JAR").toSeq.flatMap { jar =>
       // forked executor JVMs need (a) our classes, (b) the Spark
       // jars, (c) the JDK17 --add-opens set build.sbt gives the
       // driver — none are inherited from the sbt JVM
@@ -36,17 +29,17 @@ object Verify {
         "java.base/sun.nio.ch", "java.base/sun.nio.cs",
         "java.base/sun.security.action", "java.base/sun.util.calendar")
         .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-      builder.config("spark.jars", jar)
-        .config("spark.executor.extraClassPath",
-          jar + java.io.File.pathSeparator + "/opt/spark/jars/*")
-        .config("spark.executor.extraJavaOptions", addOpens)
+      Seq(
+        "spark.jars" -> jar,
+        "spark.executor.extraClassPath" ->
+          (jar + java.io.File.pathSeparator + "/opt/spark/jars/*"),
+        "spark.executor.extraJavaOptions" -> addOpens,
         // local-cluster grants executors spark.executor.memory (1g
         // default), NOT the worker size from the master string —
         // size it to the worker so the gate isn't memory-starved
-        .config("spark.executor.memory", "4g")
+        "spark.executor.memory" -> "4g")
     }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(cpus.toInt, master.toSeq ++ cluster: _*)
     new java.io.File(outDir).mkdirs()
     // Optional local-iteration subset: SPARK_GRAFT_ONLY=q1,q2 runs just
     // those queries. The driver never sets it, so the gate is unaffected.

@@ -911,8 +911,8 @@ object Dedup {
       // whitespace-only docs split to [""] — no content, nothing to
       // near-dup, and the shared degenerate signature would pair
       // EVERY empty doc with every other (quadratic at scale; the
-      // ScaleProbe surfaced this). Same guard as minhash's
-      // size(shh) > 0.
+      // round-3 scaling probe in PLANS.md surfaced this). Same guard
+      // as minhash's size(shh) > 0.
       .filter(length(col("tok")) > 0)
       // 60-bit packed token hash with mix32 avalanche on each fold:
       // the raw rolling folds are NOT bit-uniform (short tokens leave

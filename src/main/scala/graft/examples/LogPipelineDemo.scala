@@ -3,7 +3,6 @@ package graft.examples
 import graft.ops.Transforms
 import graft.sinks.{InMemoryRecordsClient, KinesisSink}
 import graft.streaming.StreamOps
-import org.apache.spark.sql.SparkSession
 import java.nio.file.Files
 
 /** End-to-end example of the reference's full data path, Spark-native:
@@ -14,13 +13,8 @@ import java.nio.file.Files
   */
 object LogPipelineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-log-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start(4,
+      "spark.app.name" -> "graft-log-pipeline-demo")
     import spark.implicits._
 
     val logDir = Files.createTempDirectory("graft-demo-logs")

@@ -16,7 +16,7 @@ import graft.{Q, ScratchDir, Tables}
   *     (md5-selected rows arrive two micro-batches late) makes the
   *     runtime actually DROP late contributions, and the DuckDB
   *     oracle replays Spark's exact micro-batch watermark semantics.
-  *     MEASURED finding (tools/WmProbe.scala, Spark 4.1.2): a
+  *     MEASURED finding (recorded in PLANS.md, Spark 4.1.2): a
   *     stateful operator runs each batch with TWO watermark values —
   *     EVICTION uses V(k-1) (the running-max event time over batches
   *     <= k-1, ms-floored, minus the delay) but the LATE-EVENTS

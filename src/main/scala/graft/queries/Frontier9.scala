@@ -1536,7 +1536,7 @@ object Frontier9 {
          ORDER BY doc_id""")
 
   /** The ann_mmr body, factored so the board entry (tierMod 100, the
-    * ≤1000-query eval tier) and the Sf100Probe capacity-rule tier
+    * ≤1000-query eval tier) and the Sf1Probe decade-3 capacity-rule tier
     * (tierMod 1000 — ≤100 queries, the single-box sf100 cut recorded
     * in the PLANS.md third-decade table) share one plan verbatim.
     */

@@ -554,12 +554,9 @@ object Graph {
           struct($"b".as("src"), $"a".as("dst")))).as("e"))
         .select($"e.src".as("src"), $"e.dst".as("dst"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val tPre = System.nanoTime()
       var alive = ed.select($"src".as("node")).distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
       var n = alive.count()
-      if (sys.env.contains("GRAFT_KCORE_DEBUG"))
-        println(f"[kcore] pre-loop n=$n ${(System.nanoTime() - tPre) / 1e9}%6.2f s")
       var deg: DataFrame = null
       var prev: Option[DataFrame] = None
       var stable = false
@@ -625,8 +622,6 @@ object Graph {
     * MATERIALIZED ONCE PER SESSION to scratch parquet, exactly like
     * [[coOccurrencePairCounts]]: the 100 TB user computes communities
     * once and points every downstream scorer at the label table.
-    * `GRAFT_GRAPH_EDGE_ISOLATED=1` restores the in-plan rebuild for
-    * per-operator timing.
     */
   def lpaLabels(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
@@ -660,16 +655,13 @@ object Graph {
       }
       labels
     }
-    if (sys.env.contains("GRAFT_GRAPH_EDGE_ISOLATED")) build
-    else {
-      val path = lpaLabelPaths.computeIfAbsent(d, _ => {
-        val p = graft.ScratchDir.path(
-          "lpa-" + d.replaceAll("[^A-Za-z0-9._-]", "_"))
-        build.write.mode("overwrite").parquet(p)
-        p
-      })
-      s.read.parquet(path).persist(StorageLevel.MEMORY_AND_DISK)
-    }
+    val path = lpaLabelPaths.computeIfAbsent(d, _ => {
+      val p = graft.ScratchDir.path(
+        "lpa-" + d.replaceAll("[^A-Za-z0-9._-]", "_"))
+      build.write.mode("overwrite").parquet(p)
+      p
+    })
+    s.read.parquet(path).persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** Co-occurrence pair counts of the part graph — (a, b, n_ab) with
@@ -693,10 +685,7 @@ object Graph {
     * build independently before this (the bench clears the cache
     * between queries by design, so a persist can't carry it). This is
     * what a 100 TB user does: build the edge table once, point every
-    * graph job at it. `GRAFT_GRAPH_EDGE_ISOLATED=1` restores the
-    * in-plan rebuild for per-operator timing (the bench-isolation
-    * stance, available when wanted — the default measures the shared
-    * shape a real session runs).
+    * graph job at it.
     */
   def coOccurrencePairCounts(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
@@ -711,21 +700,17 @@ object Graph {
              y -> struct(x AS a, y AS b))))""")).as("e"))
       .groupBy($"e.a".as("a"), $"e.b".as("b"))
       .agg(count(lit(1)).as("n_ab"))
-    if (sys.env.contains("GRAFT_GRAPH_EDGE_ISOLATED"))
-      build.persist(StorageLevel.MEMORY_AND_DISK)
-    else {
-      val path = pairCountPaths.computeIfAbsent(d, _ => {
-        val p = graft.ScratchDir.path(
-          "cooc-" + d.replaceAll("[^A-Za-z0-9._-]", "_"))
-        build.write.mode("overwrite").parquet(p)
-        p
-      })
-      // persist the read-back: queries read the edge set several
-      // times within one plan (degrees + both join sides), and a
-      // cached node/edge-sized frame beats repeated file scans; the
-      // per-query clearCache releases it
-      s.read.parquet(path).persist(StorageLevel.MEMORY_AND_DISK)
-    }
+    val path = pairCountPaths.computeIfAbsent(d, _ => {
+      val p = graft.ScratchDir.path(
+        "cooc-" + d.replaceAll("[^A-Za-z0-9._-]", "_"))
+      build.write.mode("overwrite").parquet(p)
+      p
+    })
+    // persist the read-back: queries read the edge set several
+    // times within one plan (degrees + both join sides), and a
+    // cached node/edge-sized frame beats repeated file scans; the
+    // per-query clearCache releases it
+    s.read.parquet(path).persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** q131's log2-bucket rollup, factored so MomentWidthSpec can

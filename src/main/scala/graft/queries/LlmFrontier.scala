@@ -120,7 +120,7 @@ object LlmFrontier {
     // queries from sf1 up; identical to the uncapped tier at the
     // sf0.01/sf0.1 gates) — an eval set is a benchmark artifact, it
     // does not grow with the corpus, so the scan cost is
-    // 4·|corpus|·1000 cosines: LINEAR in the corpus (Sf10Probe
+    // 4·|corpus|·1000 cosines: LINEAR in the corpus (Sf1Probe decade 2
     // measured e = 1.84 for the uncapped corpus-proportional tier —
     // the n²/100 shape this cap removes).
     "emb_matryoshka_eval" -> ((s, d) => {

@@ -195,12 +195,9 @@ private[graft] object Replay {
       // CONTENT and join semantics are unchanged (layout only); the
       // conf is read at query start and these replays always begin
       // from a fresh checkpoint, so no cross-version state mixing is
-      // possible. Non-join replays ignore the conf. The system
-      // property is a measurement seam (tools/ReplayAb interleaves
-      // v2/v3 reps inside ONE JVM — the only A/B form that survives
-      // this box's duty-cycled host noise); production default is 3.
-      "spark.sql.streaming.join.stateFormatVersion" ->
-        sys.props.getOrElse("graft.join.stateFormatVersion", "3"))
+      // possible. Non-join replays ignore the conf. The v2/v3 verdict
+      // (same-JVM interleaved A/B) is recorded in OPTIMIZATION_r20.md.
+      "spark.sql.streaming.join.stateFormatVersion" -> "3")
     val prev = settings.map { case (k, _) => k -> s.conf.getOption(k) }
     settings.foreach { case (k, v) => s.conf.set(k, v) }
     try body

@@ -30,7 +30,7 @@ object Similarity {
     * gate scale, where max ids stay below the cap). An eval set is a
     * benchmark artifact, it does not grow with the corpus: without
     * the cap every brute-force truth scan in the family is n²/100
-    * (Sf10Probe measured e = 1.84 on the uncapped matryoshka tier,
+    * (Sf1Probe decade 2 measured e = 1.84 on the uncapped matryoshka tier,
     * round 16); with it they are linear in the corpus. The same cap
     * appears in every oracle's SQL tier and in LlmFrontier/
     * LlmFrontier2's query tiers.
@@ -1426,7 +1426,7 @@ object Similarity {
     * the term join is broadcast (queries ≪ corpus).
     */
   /** The ann_hybrid_rrf body, factored so the board entry (tierMod
-    * 100) and the Sf100Probe capacity-rule tier (tierMod 1000 — ≤100
+    * 100) and the Sf1Probe decade-3 capacity-rule tier (tierMod 1000 — ≤100
     * queries, the single-box sf100 cut) share one plan verbatim.
     */
   def hybridRrf(s: SparkSession, d: String, k: Int = 10,

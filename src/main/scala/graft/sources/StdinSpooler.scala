@@ -30,9 +30,11 @@ import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
   *
   * Scale note: stdin ingestion is inherently single-process — this
   * thread is the bridge INTO the distributed engine, not a data
-  * plane. Throughput is bounded by the pipe (the reference has the
+  * plane. The pipe bounds throughput at best (the reference has the
   * identical bound); everything downstream of the spool directory is
-  * ordinary partitioned streaming.
+  * ordinary partitioned streaming. What the bridge sustains is
+  * measured by perfbench's `stdin-burst` and `stdin-paced` workloads
+  * (perfbench/README.md, "Known defects"; BASELINE.md r9 addendum).
   */
 object StdinSpooler {
 

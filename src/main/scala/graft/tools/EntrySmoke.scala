@@ -1,20 +1,13 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Sessions, SparkEntry}
 
 /** Replays the driver's t1 smoke check locally: `SparkEntry.entry`
   * on sf0.001 must return rows.
   */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(8)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"[entry-smoke] rows=$n schema=${df.schema.simpleString}")

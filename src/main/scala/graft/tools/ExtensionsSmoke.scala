@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /** Smoke for the `spark.sql.extensions=graft.GraftExtensions` config
   * path (constructor injection — only applies to a session built with
@@ -10,13 +10,9 @@ import org.apache.spark.sql.SparkSession
   */
 object ExtensionsSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-smoke")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(2,
+      "spark.app.name" -> "graft-ext-smoke",
+      "spark.sql.extensions" -> "graft.GraftExtensions")
     val row = spark.sql(
       """SELECT cosine_similarity(array(1.0D, 2.0D), array(2.0D, 4.0D)) AS c,
                 dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d""")

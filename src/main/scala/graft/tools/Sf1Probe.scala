@@ -1,17 +1,21 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables}
+import graft.{Sessions, SparkEntry, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** One-decade scale evidence (round-9 verdict item #4): synthesize a
-  * 10× corpus ("sf1") from the driver's sf0.1 parquet and time the
-  * heaviest queries at both scales, reporting the growth exponent
-  * e = log10(t_sf1 / t_sf0.1) — a corpus-linear operator shows e ≈ 1,
-  * a quadratic candidate stage shows e ≈ 2. The ×1/×2/×4 probes
-  * (ScaleProbe/GraphProbe) established short-range linearity; this
-  * adds a full decade, the strongest local evidence available for the
-  * 100 TB claims.
+/** Decade scale evidence: synthesize a 10× corpus from a smaller one
+  * and time a heavy tier at both scales, reporting the growth exponent
+  * e = log10(t_big / t_small) — a corpus-linear operator shows e ≈ 1,
+  * a quadratic candidate stage shows e ≈ 2. Three decades stack on the
+  * driver's sf0.1 parquet:
+  *
+  *   1  sf0.1 → sf1    (/tmp/graft-sf1,   token prefix c)
+  *   2  sf1   → sf10   (/tmp/graft-sf10,  token prefix d; 60M lineitem)
+  *   3  sf10  → sf100  (/tmp/graft-sf100, token prefix e; ~16 GB)
+  *
+  * Each decade reads the previous one's corpus, so decade 2 needs
+  * decade 1 built first and decade 3 needs decade 2.
   *
   * Scaling discipline — the 10 copies are DISJOINT by construction,
   * exactly how TPC-H scales (row counts of part/supplier/customer/
@@ -32,19 +36,34 @@ import org.apache.spark.sql.functions._
   *     window is how real traffic grows (session windows stay
   *     per-user-sized, there are just 10× more of them).
   *
-  *   sbt "runMain graft.tools.Sf1Probe"            # generate + probe
-  *   sbt "runMain graft.tools.Sf1Probe regen"      # force regeneration
+  *   sbt "runMain graft.tools.Sf1Probe"               # decade 1: gen + probe
+  *   sbt "runMain graft.tools.Sf1Probe regen genonly" # rebuild sf1 only
+  *   sbt "runMain graft.tools.Sf1Probe 2 genonly"     # build sf10 only
+  *   sbt "runMain graft.tools.Sf1Probe 3 only=emb_cka"
+  *
+  * Operational: never probe in the JVM that generated the corpus —
+  * page-cache and heap pollution inflate the first walls. Run
+  * `genonly`, then probe in a fresh invocation on an idle box.
   */
 object Sf1Probe {
 
-  val srcDir = "/root/testdata/sf0.1"
-  val dstDir = "/tmp/graft-sf1"
+  type Query = (SparkSession, String) => DataFrame
+
+  /** One decade: `src` scaled 10× into `dst`. `rows` is the timed
+    * tier, `warm` the key run once at the small end first so the
+    * first row is not a JIT probe.
+    */
+  final case class Decade(src: String, dst: String, prefix: String,
+      small: String, big: String, warm: String,
+      rows: Seq[(String, Query)])
+
   val copies = 10
 
-  /** The heavy tier from the round-8 clean re-runs, plus the shared
-    * edge build as its own row (the graph family reads it back).
+  /** Decade 1's tier: the heavy keys from the round-8 clean re-runs
+    * onward. The shared graph edge build is prepended as its own row
+    * (the graph family reads it back).
     */
-  val heavy: Seq[String] = Seq(
+  private val heavy1: Seq[String] = Seq(
     "q62_pagerank", "q72_triangle_count", "q75_kcore",
     "q87_shortest_path", "q90_graph_profile", "q100_assortativity",
     "dedup_tfidf_cosine", "dedup_containment",
@@ -100,6 +119,73 @@ object Sf1Probe {
     "q191_tukey_hsd", "q192_bartlett", "q193_grubbs_outlier",
     "q194_cochran_armitage")
 
+  /** Decade 2's tier: every op whose 100× claim rested on one
+    * measured decade.
+    */
+  private val heavy2: Seq[String] = Seq(
+    "q158_modularity", "q138_hits", "ann_hybrid_rrf",
+    "emb_effective_dim", "emb_dim_corr",
+    // round-15 (r14 verdict item #4): every >40 cpu-s family gets a
+    // measured second decade — the dedup blocking tier, the sweep
+    // that composes it, and the pagerank representative of the graph
+    // family's cheap half
+    "dedup_prefix_filter", "dedup_tfidf_cosine", "dedup_containment",
+    "pipeline_dedup_sweep", "q62_pagerank",
+    // round-16: one representative per new family shape — the
+    // PrefixSum support-CDF scaffold (domain-bounded support is the
+    // scale claim), the 4×-exploded eval-tier brute force, the
+    // seed-biased graph loop, and the row-local scramble layout
+    "q203_wasserstein", "emb_matryoshka_eval", "q213_ppr",
+    "pipeline_span_corruption",
+    // round-17 (r16 verdict item #7): the r16 top-cpu keys under
+    // load. ann_hybrid_rrf's r14 row predates the fixed ≤1000-query
+    // eval tier, so its current shape needed a fresh second decade;
+    // emb_abtt had only the first decade on record
+    "emb_abtt",
+    // round-17 batch shapes: the capped-tier greedy rerank (scan-
+    // bound claim) and the d²-panel covariance CKA (corpus passes
+    // amortize into fixed d-bounded work)
+    "ann_mmr", "emb_cka")
+
+  /** Decade 3's tier: the board's cpu cost leader, the dedup family's
+    * designed-linear representative, and the ANN family's production
+    * path. The brute-force eval tiers (ann_mmr, ann_hybrid_rrf's dense
+    * ranker) are deliberately NOT here: their per-query top-k sort
+    * spills ∝ corpus × queries ≈ 48 GB at sf100 (the first probe run
+    * died SPILL_OUT_OF_MEMORY on ann_mmr's stage) — they run under
+    * the capacity rule in [[bruteCap]] instead.
+    */
+  private val heavy3: Seq[String] = Seq(
+    "emb_cka", "dedup_tfidf_cosine", "ann_lsh")
+
+  /** The brute eval tiers under their written capacity rule: cut the
+    * truth tier to ≤100 queries — tierMod 1000 IS that cut, the same
+    * plan verbatim at a 10×-smaller query panel. Both ends of decade 3
+    * run the capped tier, so the growth exponent is like-for-like.
+    */
+  val bruteCap: Seq[(String, Query)] = Seq(
+    "ann_mmr[q<=100]" ->
+      ((s: SparkSession, d: String) =>
+        graft.queries.Frontier9.mmrRerank(s, d, tierMod = 1000)),
+    "ann_hybrid_rrf[q<=100]" ->
+      ((s: SparkSession, d: String) =>
+        graft.sim.Similarity.hybridRrf(s, d, k = 10, tierMod = 1000)))
+
+  private def registry(names: Seq[String]): Seq[(String, Query)] =
+    names.map(n => n -> SparkEntry.queries(n))
+
+  lazy val decades: Map[Int, Decade] = Map(
+    1 -> Decade("/root/testdata/sf0.1", "/tmp/graft-sf1", "c",
+      "sf0.1", "sf1", "dedup_containment",
+      ("graph_edge_build",
+        (s: SparkSession, d: String) =>
+          graft.queries.Graph.coOccurrencePairCounts(s, d)) +:
+        registry(heavy1)),
+    2 -> Decade("/tmp/graft-sf1", "/tmp/graft-sf10", "d",
+      "sf1", "sf10", "emb_dim_corr", registry(heavy2)),
+    3 -> Decade("/tmp/graft-sf10", "/tmp/graft-sf100", "e",
+      "sf10", "sf100", "emb_dim_corr", registry(heavy3) ++ bruteCap))
+
   private def pow10Above(maxKey: Long): Long = {
     var p = 1L
     while (p <= maxKey) p *= 10
@@ -107,17 +193,11 @@ object Sf1Probe {
   }
 
   /** Union `copies` key-offset (and where needed content-renamed)
-    * copies of every table into `dstDir`.
-    */
-  def generate(spark: SparkSession): Unit =
-    generate(spark, srcDir, dstDir, "c")
-
-  /** Parameterized variant so [[Sf10Probe]] can stack a second decade
-    * on top of the sf1 corpus with the same scaling discipline. The
-    * `tokenPrefix` must differ per decade (c → d) so the per-copy
+    * copies of every table of `srcDir` into `dstDir`. The
+    * `tokenPrefix` must differ per decade (c → d → e) so the per-copy
     * token renames stay injective when applied to already-renamed
-    * text, and it salts the embedding sign-flip so sf10's copies
-    * decorrelate from sf1's.
+    * text, and it salts the embedding sign-flip so a decade's copies
+    * decorrelate from the previous decades'.
     */
   def generate(spark: SparkSession, srcDir: String, dstDir: String,
       tokenPrefix: String): Unit = {
@@ -186,25 +266,29 @@ object Sf1Probe {
 
     out.foreach { case (name, df) =>
       df.write.mode("overwrite").parquet(s"$dstDir/$name.parquet")
-      println(s"[sf1] wrote $name")
+      println(s"[scale] wrote $dstDir/$name")
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  private def marker(dir: String) = new java.io.File(s"$dir/.graft-complete")
 
-    val marker = new java.io.File(s"$dstDir/.graft-complete")
-    if (args.contains("regen") || !marker.exists()) {
-      generate(spark)
-      marker.createNewFile()
+  /** Arguments, in any order: the decade (1, 2 or 3; default 1),
+    * `regen` to rebuild the corpus, `genonly` to build it and exit,
+    * `only=a,b` to time a subset of the tier.
+    */
+  def main(args: Array[String]): Unit = {
+    val n = args.collectFirst {
+      case a if a.nonEmpty && a.forall(_.isDigit) => a.toInt
+    }.getOrElse(1)
+    val dec = decades.getOrElse(n, throw new IllegalArgumentException(
+      s"decade $n: expected one of ${decades.keys.toSeq.sorted.mkString(", ")}"))
+    require(n == 1 || marker(dec.src).exists(),
+      s"run graft.tools.Sf1Probe ${n - 1} genonly first to build ${dec.src}")
+    val spark = Sessions.start(32)
+
+    if (args.contains("regen") || !marker(dec.dst).exists()) {
+      generate(spark, dec.src, dec.dst, dec.prefix)
+      marker(dec.dst).createNewFile()
     }
     // `genonly`: build (or confirm) the corpus and exit — the sf1
     // oracle-gate session wants the corpus without re-running the
@@ -227,35 +311,29 @@ object Sf1Probe {
     }
 
     // warm-up both directories: footers, file indexes, codegen
-    Seq(srcDir, dstDir).foreach { d =>
-      Tables.names.foreach(n => Tables.load(spark, d, n).count())
+    Seq(dec.src, dec.dst).foreach { d =>
+      Tables.names.foreach(t => Tables.load(spark, d, t).count())
     }
-    // warm the kernels once so sf0.1's first query is not a JIT probe
-    time(SparkEntry.queries("dedup_containment")(spark, srcDir))
+    // warm the kernels once so the small end's first query is not a
+    // JIT probe
+    time(SparkEntry.queries(dec.warm)(spark, dec.src))
 
-    println("| query | sf0.1 wall | sf1 wall | growth exp | sf0.1 cpu | sf1 cpu |")
-    println("|---|---|---|---|---|---|")
-
-    // shared edge build first at each scale — its own row; the graph
-    // family then measures post-edge cost exactly as a session would
-    // dev knob: `sbt "runMain graft.tools.Sf1Probe only=a,b"` probes a
-    // subset while iterating on one operator's growth exponent
+    // dev knob: `only=a,b` probes a subset while iterating on one
+    // operator's growth exponent
     val only = args.collectFirst {
       case a if a.startsWith("only=") =>
         a.stripPrefix("only=").split(",").map(_.trim).toSet
     }
-    val rows = (("graph_edge_build",
-      (s: SparkSession, d: String) =>
-        graft.queries.Graph.coOccurrencePairCounts(s, d)) +:
-      heavy.map(n => (n, SparkEntry.queries(n))))
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-
-    rows.foreach { case (name, fn) =>
-      val (w0, c0) = time(fn(spark, srcDir))
-      val (w1, c1) = time(fn(spark, dstDir))
-      val e = math.log10(w1 / w0)
-      println(f"| $name | $w0%.2f s | $w1%.2f s | $e%.2f | $c0%.1f | $c1%.1f |")
-    }
+    val (sm, bg) = (dec.small, dec.big)
+    println(s"| query | $sm wall | $bg wall | growth exp | $sm cpu | $bg cpu |")
+    println("|---|---|---|---|---|---|")
+    dec.rows.filter { case (name, _) => only.forall(_.contains(name)) }
+      .foreach { case (name, fn) =>
+        val (w0, c0) = time(fn(spark, dec.src))
+        val (w1, c1) = time(fn(spark, dec.dst))
+        val e = math.log10(w1 / w0)
+        println(f"| $name | $w0%.2f s | $w1%.2f s | $e%.2f | $c0%.1f | $c1%.1f |")
+      }
     spark.stop()
   }
 }
