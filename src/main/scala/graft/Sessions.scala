@@ -10,14 +10,14 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
   def start(cores: Int, extra: (String, String)*): SparkSession = {
-    val builder = SparkSession.builder()
+    val b = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    extra.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    extra.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

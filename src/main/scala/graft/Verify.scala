@@ -29,10 +29,14 @@ object Verify {
         "java.base/sun.nio.ch", "java.base/sun.nio.cs",
         "java.base/sun.security.action", "java.base/sun.util.calendar")
         .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
+      // the directory this JVM loaded the Spark jars from
+      val sparkJars = Paths.get(classOf[org.apache.spark.SparkContext]
+        .getProtectionDomain.getCodeSource.getLocation.toURI)
+        .getParent.resolve("*").toString
       Seq(
         "spark.jars" -> jar,
         "spark.executor.extraClassPath" ->
-          (jar + java.io.File.pathSeparator + "/opt/spark/jars/*"),
+          (jar + java.io.File.pathSeparator + sparkJars),
         "spark.executor.extraJavaOptions" -> addOpens,
         // local-cluster grants executors spark.executor.memory (1g
         // default), NOT the worker size from the master string —

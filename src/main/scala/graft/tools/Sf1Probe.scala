@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * and time a heavy tier at both scales, reporting the growth exponent
   * e = log10(t_big / t_small) — a corpus-linear operator shows e ≈ 1,
   * a quadratic candidate stage shows e ≈ 2. Three decades stack on the
-  * driver's sf0.1 parquet:
+  * sf0.1 parquet corpus:
   *
   *   1  sf0.1 → sf1    (/tmp/graft-sf1,   token prefix c)
   *   2  sf1   → sf10   (/tmp/graft-sf10,  token prefix d; 60M lineitem)
@@ -57,6 +57,7 @@ object Sf1Probe {
       small: String, big: String, warm: String,
       rows: Seq[(String, Query)])
 
+  val srcDir = "/root/testdata/sf0.1"
   val copies = 10
 
   /** Decade 1's tier: the heavy keys from the round-8 clean re-runs
@@ -175,7 +176,7 @@ object Sf1Probe {
     names.map(n => n -> SparkEntry.queries(n))
 
   lazy val decades: Map[Int, Decade] = Map(
-    1 -> Decade("/root/testdata/sf0.1", "/tmp/graft-sf1", "c",
+    1 -> Decade(srcDir, "/tmp/graft-sf1", "c",
       "sf0.1", "sf1", "dedup_containment",
       ("graph_edge_build",
         (s: SparkSession, d: String) =>
